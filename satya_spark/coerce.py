@@ -19,6 +19,8 @@ projection fused into the validation scan.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -104,5 +106,7 @@ def coerce(df: DataFrame, spec: TableSpec) -> DataFrame:
 
 
 def spark_type(dtype: str) -> str:
-    """spec dtype vocabulary → Spark SQL type string."""
-    return {"bool": "boolean", "float": "float"}.get(dtype, dtype)
+    """spec dtype vocabulary → Spark SQL type string ('bool' →
+    'boolean' at any depth: ``array<bool>``, ``struct<f:bool>``; a
+    struct field NAMED bool is left alone)."""
+    return re.sub(r"(?<![\w`])bool(?![\w:`])", "boolean", dtype)

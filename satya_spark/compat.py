@@ -4,14 +4,32 @@ A user of the reference drives it through ``StreamValidator``
 (``add_field`` / ``set_constraints`` / ``validate`` /
 ``validate_batch`` / ``validate_stream``, reference
 ``src/satya/validator.py:10-21,178-390``) or a ``Model`` subclass.
-This module reproduces that call shape on top of the Spark engine so
-existing satya call sites port mechanically; under the hood every
-call compiles to the same Column kernels the DataFrame API uses.
+This module reproduces that call shape on top of the engine so
+existing satya call sites port mechanically.
 
-Scale note: these entry points exist for COMPATIBILITY and small
-batches (they round-trip python objects through createDataFrame).
-The native surface — DataFrames in, DataFrames out — is the 100 TB
-path; this facade is the on-ramp.
+Two routes, chosen once per compiled spec:
+
+* **Python route** — when every field is
+  :func:`~satya_spark.pykernels.expressible`, i.e. the rules the
+  compiler gives it are scalar string rules on a string, scalar
+  numeric rules on a long/double, container rules on an array, or
+  ``required`` alone on a timestamp/decimal/map field (regexes the
+  Java-dialect shim translates; doubles only rendered on a JDK 18 or
+  earlier JVM), a batch is one pass over the dicts: type check →
+  required → the pure-Python kernel twins → the twin of the compiled
+  offending-value rendering, in compiled-rule order. No DataFrame is
+  built, no Spark job runs.
+* **Spark route** — any other spec (per-item rules on arrays/maps,
+  bounds on decimals, untranslatable patterns, ...) round-trips the
+  batch through ``createDataFrame`` and the compiled Column kernels,
+  one job per call.
+
+Both routes give the same ``ValidationResult`` for the same input
+(two-route parity fuzz in tests/test_property.py). There is no size
+threshold: the Spark route ingests and collects every row in Python
+too, so on a Python list it is never the faster one. The native
+surface — DataFrames in, DataFrames out — is the 100 TB path; this
+facade is the on-ramp.
 """
 
 from __future__ import annotations
@@ -40,6 +58,9 @@ _TYPE_MAP = {
 # the field_type in add_field, e.g. add_field("age", "PositiveInt").
 # Single source of truth: special_types.PRESETS.
 from .special_types import PRESETS as _PRESETS  # noqa: E402
+
+# integer dtypes → magnitude bits of the column type (int64 / int32)
+_INT_BITS = {"long": 63, "int": 31}
 
 _CONSTRAINT_KEYS = (
     "min_length", "max_length", "pattern", "email", "url", "enum",
@@ -133,7 +154,8 @@ class ValidationResult:
 class StreamValidator:
     """Drop-in call shape for satya's StreamValidator
     (``src/satya/validator.py``): declare fields + constraints, then
-    validate dicts/batches/streams. Spark-backed; compiled once."""
+    validate dicts/batches/streams. Compiled once; the route (Python
+    twins or Spark kernels) is chosen once per compiled spec."""
 
     def __init__(self, spark=None):
         self._spark = spark
@@ -171,7 +193,13 @@ class StreamValidator:
 
     # -- compilation (compile once, validator cache analog) ----------
     def _ensure(self):
+        if self._spark is None:
+            from .session import get_spark
+
+            self._spark = get_spark(app_name="satya-compat", cpus=4)
         if self._compiled is None:
+            from .pykernels import expressible, java_major
+
             spec = TableSpec(
                 name="compat",
                 fields=tuple(
@@ -180,10 +208,14 @@ class StreamValidator:
             )
             self._compiled = compile_spec(spec)
             self._spec = spec
-        if self._spark is None:
-            from .session import get_spark
-
-            self._spark = get_spark(app_name="satya-compat", cpus=4)
+            # route choice, once per compiled spec (module docstring);
+            # the JVM's version decides how doubles render
+            jdk = java_major(
+                self._spark.sparkContext._jvm.java.lang.System.getProperty(
+                    "java.version"
+                )
+            )
+            self._python_route = all(expressible(f, jdk) for f in spec.fields)
         return self._compiled
 
     def _schema(self) -> str:
@@ -196,23 +228,30 @@ class StreamValidator:
     @staticmethod
     def _type_check(v: Any, dtype: str):
         """Strict type conformance (bool ≠ int, src/lib.rs:614,804-807).
-        Returns (ok_value_for_df, error_message|None). A mismatch is a
-        per-field ValidationError — NOT a batch-aborting exception
-        (reference StreamValidator accumulates it like any other
-        failure)."""
+        Returns (ok_value_for_df, error_message|None). A mismatch — or
+        a value the column type cannot hold (an int outside int64, a
+        Decimal outside its precision) — is a per-field
+        ValidationError, NOT a batch-aborting exception (reference
+        StreamValidator accumulates it like any other failure)."""
         import datetime as _dt
 
         if v is None:
             return None, None
         if dtype == "string":
             return (v, None) if isinstance(v, str) else (None, "str")
-        if dtype in ("long", "int"):
+        if dtype in _INT_BITS:
             if isinstance(v, int) and not isinstance(v, bool):
-                return v, None
+                lim = 1 << _INT_BITS[dtype]
+                if -lim <= v < lim:
+                    return v, None
+                return None, f"int{_INT_BITS[dtype] + 1}"
             return None, "int"
         if dtype == "double":
             if isinstance(v, (int, float)) and not isinstance(v, bool):
-                return float(v), None
+                try:
+                    return float(v), None
+                except OverflowError:  # int beyond the double range
+                    return None, "float"
             return None, "float"
         if dtype == "bool":
             return (v, None) if isinstance(v, bool) else (None, "bool")
@@ -229,15 +268,33 @@ class StreamValidator:
             import decimal as _dec
 
             if isinstance(v, _dec.Decimal):
-                return v, None
-            if isinstance(v, (int, float)) and not isinstance(v, bool):
-                return _dec.Decimal(str(v)), None
-            if isinstance(v, str):
+                d = v
+            elif isinstance(v, (int, float)) and not isinstance(v, bool):
+                d = _dec.Decimal(str(v))
+            elif isinstance(v, str):
                 try:
-                    return _dec.Decimal(v), None
+                    d = _dec.Decimal(v)
                 except _dec.InvalidOperation:
                     return None, "Decimal"
-            return None, "Decimal"
+            else:
+                return None, "Decimal"
+            # the column holds finite values that round (half up, like
+            # the JVM's conversion) into p digits at scale sc
+            p, sc = (
+                (int(x) for x in dtype[dtype.index("(") + 1 : -1].split(","))
+                if "(" in dtype
+                else (10, 0)  # Spark's bare DECIMAL
+            )
+            if not d.is_finite() or (d and d.adjusted() >= p - sc):
+                return None, dtype
+            q = d.quantize(
+                _dec.Decimal(1).scaleb(-sc),
+                rounding=_dec.ROUND_HALF_UP,
+                context=_dec.Context(prec=p + 2),
+            )
+            if q and q.adjusted() >= p - sc:
+                return None, dtype
+            return d, None
         if dtype.startswith("array"):
             if not isinstance(v, (list, tuple)):
                 return None, "list"
@@ -264,54 +321,69 @@ class StreamValidator:
             return out, None
         return v, None
 
-    def _ingest(self, items: List[dict]):
-        """(rows for createDataFrame, per-item type errors). Missing
-        key ≡ null (SURVEY.md §2.2); type-mismatched values become
-        null in the frame (value rules skip them) and carry a type
+    def _ingest_one(self, item: dict):
+        """(type-checked values in field order, type errors). Missing
+        key ≡ null (SURVEY.md §2.2); a type-mismatched value becomes
+        null (value rules skip it) and carries a type
         ValidationError."""
-        rows, type_errs = [], []
+        vals, errs = [], []
+        for n, kw in self._fields.items():
+            raw = item.get(n)
+            ok_v, want = self._type_check(raw, kw["dtype"])
+            vals.append(ok_v)
+            if want is not None:
+                errs.append(
+                    ValidationError(
+                        n,
+                        f"Expected {want}, got {type(raw).__name__}",
+                        # secret fields never surface their value,
+                        # in the type-error path either
+                        value=SECRET_MASK if kw.get("secret") else raw,
+                        constraint="type",
+                    )
+                )
+        return vals, errs
+
+    # -- the two routes (module docstring) -------------------------------
+    def _results_python(self, items: List[dict]) -> List[ValidationResult]:
+        """One pass over the dicts with the pure-Python kernel twins —
+        the same errors, values and order as :meth:`_results_spark`."""
+        from .pykernels import offending_value, value_violations
+
+        fields = self._spec.fields
+        out = []
         for item in items:
-            vals, errs = [], []
-            for n, kw in self._fields.items():
-                ok_v, want = self._type_check(item.get(n), kw["dtype"])
-                vals.append(ok_v)
-                if want is not None:
+            vals, errs = self._ingest_one(item)
+            mistyped = {e.field for e in errs}
+            for f, v in zip(fields, vals):
+                if v is None:
+                    if f.required and f.name not in mistyped:
+                        errs.append(
+                            ValidationError(f.name, "required violated", constraint="required")
+                        )
+                    continue
+                for c in value_violations(f, v):
                     errs.append(
                         ValidationError(
-                            n,
-                            f"Expected {want}, got {type(item.get(n)).__name__}",
-                            # secret fields never surface their value,
-                            # in the type-error path either
-                            value=SECRET_MASK if kw.get("secret") else item.get(n),
-                            constraint="type",
+                            f.name,
+                            f"{c} violated",
+                            value=offending_value(f, v),
+                            constraint=c,
                         )
                     )
-            rows.append(tuple(vals))
-            type_errs.append(errs)
-        return rows, type_errs
+            out.append(ValidationResult(value=item if not errs else None, errors=errs))
+        return out
 
-    # -- validation entry points ----------------------------------------
-    def validate(self, item: dict) -> ValidationResult:
-        res = self.validate_batch_results([item])
-        return res[0]
-
-    def validate_batch(self, items: List[dict]) -> List[bool]:
-        """list of dicts → list of bool (src/lib.rs:359-392)."""
-        compiled = self._ensure()
-        rows, type_errs = self._ingest(items)
-        df = self._spark.createDataFrame(rows, self._schema())
-        return [
-            bool(r["valid"]) and not errs
-            for r, errs in zip(compiled.with_validation(df).collect(), type_errs)
-        ]
-
-    def validate_batch_results(self, items: List[dict]) -> List[ValidationResult]:
-        compiled = self._ensure()
-        rows, type_errs = self._ingest(items)
-        df = self._spark.createDataFrame(rows, self._schema())
+    def _results_spark(self, items: List[dict]) -> List[ValidationResult]:
+        """createDataFrame + the compiled kernels, one job per call."""
+        compiled = self._compiled
+        ingested = [self._ingest_one(item) for item in items]
+        df = self._spark.createDataFrame(
+            [tuple(vals) for vals, _ in ingested], self._schema()
+        )
         out = []
-        for item, row, terrs in zip(
-            items, compiled.with_validation(df).collect(), type_errs
+        for item, row, (_, terrs) in zip(
+            items, compiled.with_validation(df).collect(), ingested
         ):
             # a mistyped value was PRESENT: suppress the 'required'
             # violation its null placeholder would otherwise raise
@@ -328,6 +400,21 @@ class StreamValidator:
             ]
             out.append(ValidationResult(value=item if not errs else None, errors=errs))
         return out
+
+    # -- validation entry points ----------------------------------------
+    def validate(self, item: dict) -> ValidationResult:
+        res = self.validate_batch_results([item])
+        return res[0]
+
+    def validate_batch(self, items: List[dict]) -> List[bool]:
+        """list of dicts → list of bool (src/lib.rs:359-392)."""
+        return [r.is_valid for r in self.validate_batch_results(items)]
+
+    def validate_batch_results(self, items: List[dict]) -> List[ValidationResult]:
+        self._ensure()
+        if self._python_route:
+            return self._results_python(items)
+        return self._results_spark(items)
 
     def validate_stream(
         self, items: Iterable[dict], batch_size: int = 10_000

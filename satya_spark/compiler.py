@@ -56,7 +56,11 @@ class CompiledRule:
     equivalent DuckDB predicate over the same column names.
     ``offending`` / ``offending_sql`` render the offending value as a
     string for the violation row (``ValidationError.value``,
-    ``src/satya/__init__.py:20-48``).
+    ``src/satya/__init__.py:20-48``). ``kind`` names the kernel family
+    that built the rule: ``required``, ``string`` / ``numeric`` (scalar
+    value rules), ``item`` (a scalar rule applied per array element or
+    map value), ``container`` (``min_items`` / ``max_items`` /
+    ``unique_items``), ``struct`` (struct-element rules) or ``row``.
     """
 
     field: str
@@ -65,6 +69,7 @@ class CompiledRule:
     fail_sql: str
     offending_fn: Callable[[], "Column"]  # noqa: F821
     offending_sql: str
+    kind: str = "row"
 
     @property
     def fail(self):
@@ -133,11 +138,11 @@ def compile_field(f: FieldSpec) -> List[CompiledRule]:
                         ",",
                         F.transform(
                             _vals(),
-                            lambda x: x.cast("decimal(28,6)").cast("string"),
+                            lambda x: x.try_cast("decimal(28,6)").cast("string"),
                         ),
                     ),
                     f"array_to_string(list_transform({vals_sql},"
-                    f" x -> CAST(CAST(x AS DECIMAL(28,6)) AS VARCHAR)), ',')",
+                    f" x -> CAST(TRY_CAST(x AS DECIMAL(28,6)) AS VARCHAR)), ',')",
                 )
             return (
                 lambda: F.concat_ws(
@@ -149,16 +154,18 @@ def compile_field(f: FieldSpec) -> List[CompiledRule]:
         if is_float:
             # CAST(double AS STRING) formats differently across engines
             # (Java "1.0E9" vs DuckDB "1000000000.0"); use a fixed
-            # decimal rendering for portability.
+            # decimal rendering for portability. TRY_CAST: under ANSI
+            # mode a plain cast aborts the whole job on |x| >= 1e22;
+            # such a value (and NaN/±inf) renders as NULL instead.
             return (
-                lambda: F.col(name).cast("decimal(28,6)").cast("string"),
-                f"CAST(CAST({name} AS DECIMAL(28,6)) AS VARCHAR)",
+                lambda: F.col(name).try_cast("decimal(28,6)").cast("string"),
+                f"CAST(TRY_CAST({name} AS DECIMAL(28,6)) AS VARCHAR)",
             )
         return lambda: F.col(name).cast("string"), f"CAST({name} AS VARCHAR)"
 
     offending_fn, offending_sql = off_fns()
 
-    def add(constraint: str, ok_fn: Callable, ok_sql: str) -> None:
+    def add(constraint: str, ok_fn: Callable, ok_sql: str, kind: str) -> None:
         from pyspark.sql import functions as F
 
         rules.append(
@@ -169,6 +176,7 @@ def compile_field(f: FieldSpec) -> List[CompiledRule]:
                 fail_sql=f"({name} IS NOT NULL AND NOT ({ok_sql}))",
                 offending_fn=offending_fn,
                 offending_sql=offending_sql,
+                kind=kind,
             )
         )
 
@@ -207,6 +215,7 @@ def compile_field(f: FieldSpec) -> List[CompiledRule]:
                 fail_sql=req_sql,
                 offending_fn=_req_off,
                 offending_sql="CAST(NULL AS VARCHAR)",
+                kind="required",
             )
         )
 
@@ -255,6 +264,7 @@ def compile_field(f: FieldSpec) -> List[CompiledRule]:
                 ),
                 f"len(list_filter({vals_sql},"
                 f" x -> x IS NOT NULL AND NOT ({pred_sql}))) = 0",
+                "item",
             )
 
         if f.min_length is not None:
@@ -330,6 +340,7 @@ def compile_field(f: FieldSpec) -> List[CompiledRule]:
                     cname,
                     _icmp,
                     f"list_aggregate({vals_sql}, '{agg}') {op_sql} {_fmt_num(v)}",
+                    "item",
                 )
         if f.multiple_of is not None:
             m = f.multiple_of
@@ -376,6 +387,7 @@ def compile_field(f: FieldSpec) -> List[CompiledRule]:
             >= n,
             f"length(trim({name}, ' ' || chr(9) || chr(10) || chr(13)"
             f" || chr(11) || chr(12))) >= {n}",
+            "string",
         )
     if f.max_length is not None and not (is_array or is_map):
         n = f.max_length
@@ -383,6 +395,7 @@ def compile_field(f: FieldSpec) -> List[CompiledRule]:
             "max_length",
             lambda n=n: FN().length(FN().col(name)) <= n,
             f"length({name}) <= {n}",
+            "string",
         )
     if f.pattern is not None and not (is_array or is_map):
         p = f.pattern
@@ -396,6 +409,7 @@ def compile_field(f: FieldSpec) -> List[CompiledRule]:
             "pattern",
             lambda p=p: FN().col(name).rlike(p),
             f"regexp_matches({name}, {_sql_quote(p)})",
+            "string",
         )
     if f.email and not (is_array or is_map):
         # regex + max length 254 (src/lib.rs:947-969)
@@ -405,12 +419,14 @@ def compile_field(f: FieldSpec) -> List[CompiledRule]:
             & (FN().length(FN().col(name)) <= EMAIL_MAX_LEN),
             f"(regexp_matches({name}, {_sql_quote(EMAIL_PATTERN)})"
             f" AND length({name}) <= {EMAIL_MAX_LEN})",
+            "string",
         )
     if f.url and not (is_array or is_map):
         add(
             "url",
             lambda: FN().col(name).rlike(URL_PATTERN),
             f"regexp_matches({name}, {_sql_quote(URL_PATTERN)})",
+            "string",
         )
     if f.enum is not None and not (is_array or is_map):
         vals = ", ".join(_sql_quote(v) for v in f.enum)
@@ -419,6 +435,7 @@ def compile_field(f: FieldSpec) -> List[CompiledRule]:
             "enum",
             lambda enum=enum: FN().col(name).isin(*enum),
             f"{name} IN ({vals})",
+            "string",
         )
 
     # --- numeric kernels --------------------------------------------
@@ -443,7 +460,7 @@ def compile_field(f: FieldSpec) -> List[CompiledRule]:
                     "<": c < F.lit(v),
                 }[op]
 
-            add(cname, _cmp, f"{name} {op_sql} {_fmt_num(v)}")
+            add(cname, _cmp, f"{name} {op_sql} {_fmt_num(v)}", "numeric")
     if f.multiple_of is not None and not (is_array or is_map):
         m = f.multiple_of
         # fractional steps need the ε-tolerant float modulo even on
@@ -463,13 +480,14 @@ def compile_field(f: FieldSpec) -> List[CompiledRule]:
                 f" OR abs(abs(fmod({name}, {_fmt_num(m)})) - {_fmt_num(m)})"
                 f" < {MULTIPLE_OF_EPS!r})"
             )
-            add("multiple_of", _mof, ok_sql)
+            add("multiple_of", _mof, ok_sql, "numeric")
         else:
             mi = int(m)
             add(
                 "multiple_of",
                 lambda mi=mi: (FN().col(name) % mi) == 0,
                 f"({name} % {mi}) = 0",
+                "numeric",
             )
 
     # --- array kernels ------------------------------------------------
@@ -479,6 +497,7 @@ def compile_field(f: FieldSpec) -> List[CompiledRule]:
             "min_items",
             lambda n=n: FN().size(FN().col(name)) >= n,
             f"len({name}) >= {n}",
+            "container",
         )
     if f.max_items is not None:
         n = f.max_items
@@ -486,6 +505,7 @@ def compile_field(f: FieldSpec) -> List[CompiledRule]:
             "max_items",
             lambda n=n: FN().size(FN().col(name)) <= n,
             f"len({name}) <= {n}",
+            "container",
         )
     if f.unique_items:
         # stringified-comparison uniqueness (src/lib.rs:894-906)
@@ -494,6 +514,7 @@ def compile_field(f: FieldSpec) -> List[CompiledRule]:
             lambda: FN().size(FN().col(name))
             == FN().size(FN().array_distinct(FN().col(name))),
             f"len({name}) = len(list_distinct({name}))",
+            "container",
         )
 
     return rules
@@ -558,12 +579,12 @@ def _struct_item_rules(f: FieldSpec) -> List[CompiledRule]:
                         FN().transform(
                             _vals(),
                             lambda x: _get(x, gpath)
-                            .cast("decimal(28,6)")
+                            .try_cast("decimal(28,6)")
                             .cast("string"),
                         ),
                     ),
                     f"array_to_string(list_transform({vals_sql},"
-                    f" x -> CAST(CAST({gsql} AS DECIMAL(28,6)) AS VARCHAR)), ',')",
+                    f" x -> CAST(TRY_CAST({gsql} AS DECIMAL(28,6)) AS VARCHAR)), ',')",
                 )
             return (
                 lambda: FN().concat_ws(
@@ -601,6 +622,7 @@ def _struct_item_rules(f: FieldSpec) -> List[CompiledRule]:
                     ),
                     offending_fn=off_fn,
                     offending_sql=off_sql,
+                    kind="struct",
                 )
             )
 
@@ -634,6 +656,7 @@ def _struct_item_rules(f: FieldSpec) -> List[CompiledRule]:
                     ),
                     offending_fn=lambda: FN().lit(None).cast("string"),
                     offending_sql="CAST(NULL AS VARCHAR)",
+                    kind="struct",
                 )
             )
 

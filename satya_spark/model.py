@@ -5,10 +5,17 @@ A satya user's primary API is a Model subclass with annotated fields
 and ``Field(...)`` kwargs. This facade reproduces that declaration
 shape and routes it into the Spark engine twice over:
 
-* small-batch / single-record: ``model_validate`` /
-  ``model_validate_batch`` go through the compat
-  :class:`~satya_spark.compat.StreamValidator` (compiled once per
-  class, cached — the ``_validator_instance`` analog);
+* small-batch / single-record: ``Model(...)``, ``model_validate`` /
+  ``model_validate_batch`` and ``validate_assignment`` go through the
+  compat :class:`~satya_spark.compat.StreamValidator` (compiled once
+  per class, cached — the ``_validator_instance`` analog). When every
+  field's compiled rules are :func:`~satya_spark.pykernels.expressible`
+  (scalar string/numeric rules, array container rules, presence-only
+  timestamp/decimal/map fields, regexes the Java-dialect shim
+  translates) it validates the dicts with the pure-Python kernel twins
+  and starts no Spark job; any other class takes the Spark route, one
+  ``createDataFrame`` job per call. Nested models validate through
+  their own class's validator, so each class picks its route;
 * at scale: ``spec()`` yields the :class:`TableSpec`, so
   ``validate_df(df)`` runs the SAME declaration as one codegen'd
   DataFrame pass — the 100 TB path a reference user graduates to

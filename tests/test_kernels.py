@@ -315,3 +315,42 @@ def test_map_float_values_offending_value_matches_duckdb(spark):
         for r in con.execute(compiled.violations_sql("t", ["i"])).fetchall()
     )
     assert spark_rows == duck_rows
+
+
+def test_out_of_range_float_offending_value_is_null_not_abort(spark):
+    """Under ANSI mode a plain CAST(double AS DECIMAL(28,6)) aborts the
+    job for |x| >= 1e22. The rendering uses TRY_CAST, so such a value
+    (scalar, array element or struct element) renders as NULL in both
+    engines and the violation row survives."""
+    import duckdb
+
+    inner = FieldSpec("w", "double", le=1.0)
+    spec = TableSpec(
+        name="t",
+        fields=(
+            FieldSpec("s", "double", le=1.0),
+            FieldSpec("xs", "array<double>", max_items=1),
+            FieldSpec("ys", "array<struct<w:double>>", item_fields=(inner,)),
+        ),
+    )
+    compiled = compile_spec(spec)
+    data = [(0, 1e30, [1e30, 2.5], [{"w": 1e30}, {"w": 2.0}]), (1, 0.5, [0.5], [{"w": 0.5}])]
+    df = spark.createDataFrame(
+        data, "i int, s double, xs array<double>, ys array<struct<w:double>>"
+    )
+    spark_rows = sorted(
+        (r["i"], r["field"], r["constraint_name"], r["offending_value"])
+        for r in compiled.violations_df(df, ["i"]).collect()
+    )
+    assert spark_rows == [
+        (0, "s", "le", None),
+        (0, "xs", "max_items", "2.500000"),
+        (0, "ys[].w", "le", "2.000000"),
+    ]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (i INT, s DOUBLE, xs DOUBLE[], ys STRUCT(w DOUBLE)[])")
+    con.executemany("INSERT INTO t VALUES (?, ?, ?, ?)", data)
+    duck_rows = sorted(
+        con.execute(compiled.violations_sql("t", ["i"])).fetchall()
+    )
+    assert [tuple(r) for r in duck_rows] == spark_rows

@@ -252,3 +252,61 @@ def test_validate_assignment(spark):
     with pytest.raises(ModelValidationError):
         m.name = "x"  # min_length kernel fires on assignment
     assert m.name == "Bob"  # rejected assignment leaves value intact
+
+
+# --- facade routes: eligible specs start no Spark job ------------------------
+
+def _new_job_ids(spark, fn):
+    """Spark job ids started while ``fn()`` runs (a job group of its
+    own, listener bus drained before each read)."""
+    sc = spark.sparkContext
+
+    def ids():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup("facade-route-pin"))
+
+    sc.setJobGroup("facade-route-pin", "facade route job-count pin")
+    try:
+        before = ids()
+        fn()
+        return ids() - before
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_eligible_model_starts_no_spark_job(spark):
+    class Pinned(Model):
+        model_config = {"validate_assignment": True}
+        name: str = Field(min_length=2, pattern=r"^[A-Z][a-z]+$")
+        email: EmailStr
+        score: float = Field(ge=0.0, lt=100.0, multiple_of=0.5)
+        tags: List[str] = Field(min_items=1, unique_items=True)
+
+    Pinned.validator(spark)
+    ok = {"name": "Ada", "email": "ada@example.com", "score": 2.5, "tags": ["a"]}
+
+    def construct_and_assign():
+        m = Pinned(**ok)
+        m.score = 3.0
+        with pytest.raises(ModelValidationError):
+            m.score = 3.3
+        with pytest.raises(ModelValidationError):
+            Pinned(**{**ok, "name": "x"})
+
+    assert _new_job_ids(spark, construct_and_assign) == set()
+    batch = [ok, {**ok, "score": float("nan")}, {**ok, "tags": ["a", "a"]}]
+    got = []
+    assert _new_job_ids(spark, lambda: got.extend(Pinned.model_validate_batch(batch))) == set()
+    assert got == [True, False, False]
+
+
+def test_ineligible_model_still_runs_spark(spark):
+    class Letters(Model):
+        # \p{L} has no Python-dialect translation: Spark route
+        word: str = Field(pattern=r"^\p{L}+$")
+
+    Letters.validator(spark)
+    assert _new_job_ids(spark, lambda: Letters(word="héllo"))
+    with pytest.raises(ModelValidationError):
+        Letters(word="h3llo")

@@ -6,7 +6,9 @@ generating the corpora instead of hand-picking them."""
 
 from __future__ import annotations
 
+import datetime as _dt
 import re
+from decimal import Decimal as _Dec
 
 import hypothesis.strategies as st
 from hypothesis import HealthCheck, given, settings
@@ -17,7 +19,7 @@ from satya_spark.spec import EMAIL_MAX_LEN, EMAIL_PATTERN, URL_PATTERN, FieldSpe
 
 # Java/Python-equivalent anchored patterns only (SURVEY.md §7: the
 # spec requires anchored RE2-compatible patterns)
-PATTERNS = [r"^[a-z]+$", r"^a.*z$", r"^[0-9]{2,4}$"]
+PATTERNS = [r"^[a-z]+$", r"^a.*z$", r"^[0-9]{2,4}$", r"^\w+\d$"]
 ENUMS = [("red", "green"), ("a", "b", "c")]
 
 
@@ -60,11 +62,12 @@ str_values = st.lists(
     st.one_of(
         st.none(),
         st.text(
-            alphabet="abz019 \t\n@.-红😀",
+            alphabet="abz019 \t\n@.-红😀\r\u2028\u0085\xa0٣",
             max_size=14,
         ),
         st.sampled_from(
-            ["", "   ", "\t\t", "a@b.co", "red", "aXz", "42", "a" * 300]
+            ["", "   ", "\t\t", "a@b.co", "red", "aXz", "42", "a" * 300,
+             "a@b.co\r", "a@b.co\r\n", "abc\u2028", "az\n", "az\r\n", "a\r\nz"]
         ),
     ),
     min_size=1,
@@ -110,6 +113,275 @@ def test_int_kernels_match_python_oracle(spark, f, values):
     got = _spark_verdicts(spark, f, values, T.LongType())
     want = [sorted(py_validate_num(f, v)) for v in values]
     assert got == want, f"spec={f} values={values}"
+
+
+# --- double scalar kernels: Spark's NaN ordering and decimal rendering -------
+
+def _spark_violations(spark, f: FieldSpec, values, spark_type):
+    """(constraint, offending_value) pairs per value, compiled kernels."""
+    schema = T.StructType([T.StructField(f.name, spark_type, True)])
+    df = spark.createDataFrame([(v,) for v in values], schema)
+    compiled = compile_spec(TableSpec(name="p", fields=(f,)))
+    return [
+        sorted((x["constraint_name"], x["offending_value"]) for x in r["violations"])
+        for r in compiled.with_validation(df).collect()
+    ]
+
+
+def py_violations(f: FieldSpec, v):
+    """The same pairs from the pure-Python twins (value rules +
+    offending-value rendering)."""
+    from satya_spark.pykernels import offending_value, value_violations
+
+    if v is None:
+        return [("required", None)] if f.required else []
+    return sorted((c, offending_value(f, v)) for c in value_violations(f, v))
+
+
+_DOUBLE_BOUNDS = st.one_of(
+    st.none(), st.integers(-5, 5), st.sampled_from([-2.5, 0.0, 0.5, 99.5])
+)
+
+double_field = st.builds(
+    lambda req, ge, le, gt, lt, m: FieldSpec(
+        "x", "double", required=req, ge=ge, le=le, gt=gt, lt=lt, multiple_of=m
+    ),
+    st.booleans(),
+    _DOUBLE_BOUNDS,
+    _DOUBLE_BOUNDS,
+    _DOUBLE_BOUNDS,
+    _DOUBLE_BOUNDS,
+    st.one_of(st.none(), st.sampled_from([0.5, 2.5])),
+)
+
+double_values = st.lists(
+    st.one_of(
+        st.none(),
+        st.sampled_from(
+            [float("nan"), float("inf"), float("-inf"), -0.0, 0.0, 1e30, -1e30,
+             1e22, 9.999999999999999e21, 2.5, 5.0, 0.1, 1e-7, 5e-7, 2.0**60]
+        ),
+        st.floats(),
+        st.integers(-12, 12).map(lambda k: k * 0.5),
+    ),
+    min_size=1,
+    max_size=16,
+)
+
+
+@settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
+@given(f=double_field, values=double_values)
+def test_double_kernels_match_python_oracle(spark, f, values):
+    got = _spark_violations(spark, f, values, T.DoubleType())
+    want = [py_violations(f, v) for v in values]
+    assert got == want, f"spec={f} values={values}"
+
+
+def test_double_rendering_matches_spark(spark):
+    """The offending-value twin renders doubles exactly like
+    TRY_CAST(x AS DECIMAL(28,6)): Spark builds that decimal from the
+    JVM's Double.toString digits, which are not Python's shortest
+    repr above 2**53 (5.143871090212682e16 → ...816, not ...820).
+    The twin ports the JDK <= 18 digit loop; on a later JVM the facade
+    keeps fields that render doubles on the compiled kernels."""
+    import random
+    import struct
+
+    from pyspark.sql import functions as F
+
+    from satya_spark.pykernels import expressible, java_major, offending_value
+
+    jdk = java_major(
+        spark.sparkContext._jvm.java.lang.System.getProperty("java.version")
+    )
+    if jdk > 18:
+        assert not expressible(FieldSpec("x", "double", ge=0.0), jdk)
+        return
+
+    rnd = random.Random(20261017)
+    vals = [
+        5.143871090212682e16, 7.932233374190789e16, 2.0**60, 2.0**62 + 2048.0,
+        1.0e19 + 2.0**14, 9.999999999999999e21, 1e22, 1.7976931348623157e308,
+        5e-324, 5e-7, -5e-7, 4.9999999999999996e-07, 123456789.12345679, -0.0,
+        float("nan"), float("inf"),
+    ]
+    vals += [rnd.uniform(-1, 1) * 10.0 ** rnd.randint(-9, 23) for _ in range(1500)]
+    vals += [
+        struct.unpack("<d", struct.pack("<Q", rnd.getrandbits(64)))[0]
+        for _ in range(500)
+    ]
+    f = FieldSpec("x", "double")
+    df = spark.createDataFrame(list(enumerate(vals)), "i long, x double")
+    got = {
+        r["i"]: r["s"]
+        for r in df.select(
+            "i", F.col("x").try_cast("decimal(28,6)").cast("string").alias("s")
+        ).collect()
+    }
+    bad = [
+        (v, got[i], offending_value(f, v))
+        for i, v in enumerate(vals)
+        if got[i] != offending_value(f, v)
+    ]
+    assert not bad, bad[:5]
+
+
+# --- facade: Python route ≡ Spark route ---------------------------------------
+
+_NAN, _INF = float("nan"), float("inf")
+_FACADE_VALUES = {
+    "string": st.one_of(
+        st.text(alphabet="abz09 @.\r\n\u2028\xa0٣", max_size=10),
+        st.sampled_from(["a@b.co", "a@b.co\r", "http://x.io", "red", "az\r\n"]),
+        st.integers(-3, 3),
+    ),
+    "long": st.one_of(
+        st.integers(-10, 110),
+        st.sampled_from([2**63, -(2**63), 2**63 - 1, -(2**63) - 1, True]),
+        st.floats(allow_nan=False, max_value=5, min_value=-5),
+    ),
+    "double": st.one_of(
+        st.floats(),
+        st.integers(-10, 110),
+        st.sampled_from([_NAN, _INF, -_INF, -0.0, 1e30, 10**400, False, "1.5"]),
+    ),
+    "bool": st.one_of(st.booleans(), st.integers(0, 1)),
+    "timestamp": st.one_of(
+        st.datetimes(
+            min_value=_dt.datetime(1970, 1, 2), max_value=_dt.datetime(2100, 1, 1)
+        ),
+        st.sampled_from(["2024-01-01T10:00:00Z", "2024-13-01", "nope", 7]),
+    ),
+    "decimal(38,6)": st.one_of(
+        st.decimals(allow_nan=True, allow_infinity=True),
+        st.sampled_from(
+            [_Dec("1e40"), _Dec("99999999999999999999999999999999.9999995"),
+             _Dec("1.2345678"), "1.5", "x", 1.5, 7, _NAN]
+        ),
+    ),
+    "array<string>": st.one_of(
+        st.lists(st.one_of(st.none(), st.sampled_from(["a", "b", "a ", ""])), max_size=5),
+        st.lists(st.integers(0, 2), min_size=1, max_size=2),
+        st.just("ab"),
+    ),
+    "array<long>": st.lists(st.one_of(st.none(), st.integers(-3, 3)), max_size=5),
+    "array<double>": st.lists(
+        st.one_of(st.none(), st.floats(), st.sampled_from([_NAN, -0.0, 0.0, 1e30])),
+        max_size=5,
+    ),
+    "array<bool>": st.lists(st.one_of(st.none(), st.booleans()), max_size=4),
+    "map<string,long>": st.one_of(
+        st.dictionaries(
+            st.text(alphabet="ab", max_size=2),
+            st.one_of(st.none(), st.integers(-3, 3)),
+            max_size=3,
+        ),
+        st.just({"a": "b"}),
+        st.just(["a"]),
+    ),
+}
+
+
+def _facade_field(i: int):
+    """One field of any dtype the facade accepts, paired with the route
+    it must get: rules the Python route covers for that dtype (bounds
+    of 0 included), or a value bound on an array, map or decimal —
+    per-item and decimal bounds only the compiled kernels check."""
+    name = f"f{i}"
+    opt = lambda s: st.one_of(st.none(), s)  # noqa: E731
+    python = lambda s: s.map(lambda f: (f, True))  # noqa: E731
+    string = st.builds(
+        lambda req, mn, mx, pat, em, url, en, sec: FieldSpec(
+            name, "string", required=req, min_length=mn, max_length=mx,
+            pattern=pat, email=em, url=url, enum=en, secret=sec,
+        ),
+        st.booleans(), opt(st.integers(0, 3)), opt(st.integers(2, 8)),
+        opt(st.sampled_from(PATTERNS)), st.booleans(), st.booleans(),
+        opt(st.sampled_from(ENUMS)), st.booleans(),
+    )
+    numeric = st.builds(
+        lambda dtype, req, ge, le, gt, lt, m: FieldSpec(
+            name, dtype, required=req, ge=ge, le=le, gt=gt, lt=lt, multiple_of=m
+        ),
+        st.sampled_from(["long", "double"]), st.booleans(), _DOUBLE_BOUNDS,
+        _DOUBLE_BOUNDS, opt(st.integers(0, 100)), opt(st.integers(0, 100)),
+        opt(st.sampled_from([2, 3, 0.5, 2.5])),
+    )
+    array = st.builds(
+        lambda dtype, req, mni, mxi, uni: FieldSpec(
+            name, dtype, required=req, min_items=mni, max_items=mxi, unique_items=uni
+        ),
+        st.sampled_from(["array<string>", "array<long>", "array<double>", "array<bool>"]),
+        st.booleans(), opt(st.integers(0, 2)), opt(st.integers(1, 3)), st.booleans(),
+    )
+    presence = st.builds(
+        lambda dtype, req: FieldSpec(name, dtype, required=req),
+        st.sampled_from(["bool", "timestamp", "decimal(38,6)", "map<string,long>"]),
+        st.booleans(),
+    )
+    bounded = st.builds(
+        lambda dtype, req, rule, bound: (
+            FieldSpec(name, dtype, required=req, **{rule: bound}), False
+        ),
+        st.sampled_from(["array<long>", "array<double>", "map<string,long>", "decimal(38,6)"]),
+        st.booleans(), st.sampled_from(["ge", "gt", "le", "lt"]),
+        st.sampled_from([0, 0.0, 1, -2.5]),
+    )
+    return st.one_of(
+        python(string), python(numeric), python(array), python(presence), bounded
+    )
+
+
+@st.composite
+def _facade_case(draw):
+    drawn = [draw(_facade_field(i)) for i in range(draw(st.integers(1, 4)))]
+    fields = [f for f, _ in drawn]
+    items = []
+    for _ in range(draw(st.integers(1, 8))):
+        item = {}
+        for f in fields:
+            kind = draw(st.sampled_from(["value", "value", "value", "none", "absent"]))
+            if kind == "value":
+                item[f.name] = draw(_FACADE_VALUES[f.dtype])
+            elif kind == "none":
+                item[f.name] = None
+        items.append(item)
+    return fields, all(ok for _, ok in drawn), items
+
+
+@settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
+@given(case=_facade_case())
+def test_facade_routes_agree(spark, case):
+    """The StreamValidator takes the Python route exactly when every
+    field's rules have Python twins, and its results then equal the
+    Spark route's: same errors (field, constraint, offending value,
+    message) in the same order, same value."""
+    import dataclasses
+
+    from satya_spark.compat import StreamValidator
+
+    fields, python_route, items = case
+    v = StreamValidator(spark)
+    for f in fields:
+        kw = {
+            k: x
+            for k, x in dataclasses.asdict(f).items()
+            if k != "name" and x is not None and x is not False
+        }
+        v._fields[f.name] = {"required": f.required, **kw}
+    v._ensure()
+    assert v._python_route == python_route, f"fields={fields}"
+    got, sp = v.validate_batch_results(items), v._results_spark(items)
+
+    def shape(r):
+        return (
+            r.is_valid,
+            r._value,
+            [(e.field, e.constraint, e.value, e.message) for e in r.errors],
+        )
+
+    for item, a, b in zip(items, got, sp):
+        assert shape(a) == shape(b), f"fields={fields} item={item!r}"
 
 
 # --- per-item kernels (round 2: forall / array_min-max) ---------------------
