@@ -7,6 +7,15 @@
         --output /out                   # writes verdicts/ violations/
         [--manifest /out/manifest]      # enables checkpoint-resume
         [--shards 64] [--sample-per-shard N]
+        [--quarantine]                  # also writes split/valid=true|false
+
+With ``--quarantine`` the job makes ONE pass of the compiled kernels
+over the input: the split write. Verdicts are aggregated from the
+split's stored ``violations`` arrays (key column + array only), and
+violation rows re-run the kernels over the quarantined rows alone.
+Without it the job makes two passes, one for the verdicts (counts
+only, no violations array) and one for the violation rows.
+``--manifest`` keeps its own verdict pass.
 
 On a cluster:  spark-submit --py-files satya_spark.zip -m ... is the
 same entry point; locally it builds a session itself.
@@ -83,6 +92,7 @@ def cmd_validate(args) -> int:
     from .coerce import spark_type
     from .engine import ValidationEngine
     from .io import read_ref
+    from .manifest import shard_col
     from .session import get_spark
     from .sources.json_source import read_ndjson
 
@@ -125,35 +135,53 @@ def cmd_validate(args) -> int:
 
         df = coerce(df, spec)
 
+    sides = None
+    src = df  # the frame violation rows come from
+    if args.quarantine:
+        # the split write is the job's ONE kernel pass; verdicts and
+        # violations are derived from what it stored. Read back with
+        # the annotated schema: a 0-row input writes no partition
+        # directory, and schema inference then fails.
+        split = f"{args.output}/split"
+        sides = eng.write_split(df, split)
+        stored = spark.read.schema(eng.annotate(df).drop("shard").schema).parquet(split)
+        # the kernels re-run on the quarantined rows only, so violation
+        # rows stay exact and uncapped (the stored array is capped at
+        # MAX_VIOLATIONS_PER_ROW)
+        src = stored.filter(~F.col("valid")).drop("violations", "valid")
+
     if args.manifest:
         verdicts = eng.run_resumable(
             df, args.manifest, fingerprint=_input_fingerprint(args.input)
         )
+    elif args.quarantine:
+        # the stored array already carries the per-row cap
+        verdicts = eng.shard_verdicts(
+            stored.select(
+                shard_col(eng.n_shards, eng.shard_key).alias("shard"), "violations"
+            )
+        )
     else:
-        verdicts = eng.shard_verdicts(eng.annotate(df))
+        verdicts = eng.shard_verdicts(df)
     verdicts.write.mode("overwrite").parquet(f"{args.output}/verdicts")
 
     if args.sample_per_shard:
-        viol = eng.violations_sampled(df, per_shard_cap=args.sample_per_shard)
+        viol = eng.violations_sampled(src, per_shard_cap=args.sample_per_shard)
     else:
-        viol = eng.violations(df)
+        viol = eng.violations(src)
     viol.write.mode("overwrite").parquet(f"{args.output}/violations")
 
-    sides = None
-    if args.quarantine:
-        sides = eng.write_split(df, f"{args.output}/split")
-
-    v = spark.read.parquet(f"{args.output}/verdicts")
-    row = v.agg(
-        F.sum("n_rows").alias("rows"),
-        F.sum("n_invalid_rows").alias("invalid"),
-    ).collect()[0]
-    n_rows = int(row["rows"] or 0)
-    n_invalid = int(row["invalid"] or 0)
+    shards = (
+        spark.read.parquet(f"{args.output}/verdicts")
+        .select("n_rows", "n_invalid_rows")
+        .collect()
+    )
+    n_rows = sum(int(r["n_rows"]) for r in shards)
+    n_invalid = sum(int(r["n_invalid_rows"]) for r in shards)
     summary = {
         "rows": n_rows,
         "invalid_rows": n_invalid,
-        "shards": v.count(),
+        "shards": len(shards),
         "output": args.output,
     }
     if sides is not None:

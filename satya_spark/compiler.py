@@ -782,14 +782,40 @@ def _struct_item_rules(f: FieldSpec) -> List[CompiledRule]:
 @dataclass
 class CompiledSpec:
     """All kernels of a TableSpec, with single-scan Spark evaluators
-    and matching oracle-SQL generators."""
+    and matching oracle-SQL generators.
+
+    The composite kernel columns (:meth:`valid_col`,
+    :meth:`violations_array_col`, :meth:`violation_count_col`) are
+    built once per SparkContext and shared by every consumer in a job:
+    a build walks every rule through py4j, thousands of JVM round
+    trips for the transcript spec."""
 
     spec: TableSpec
     rules: List[CompiledRule]
+    _columns: dict = dc_field(
+        default_factory=dict, init=False, repr=False, compare=False
+    )
 
     # ---- Spark side ---------------------------------------------------
+    def _memo(self, name: str, build: Callable):
+        """``build()`` once per active SparkContext. The context is
+        part of the key so a restarted session rebuilds instead of
+        handing out a Column of a dead JVM."""
+        from pyspark import SparkContext
+
+        sc = SparkContext._active_spark_context
+        hit = self._columns.get(name)
+        if hit is not None and hit[0] is sc:
+            return hit[1]
+        col = build()
+        self._columns[name] = (sc, col)
+        return col
+
     def valid_col(self):
         """Row validity: conjunction of all kernels (NULL-safe)."""
+        return self._memo("valid", self._valid)
+
+    def _valid(self):
         from pyspark.sql import functions as F
 
         out = F.lit(True)
@@ -815,6 +841,9 @@ class CompiledSpec:
         a struct — the columnar analog of satya's is-simple fast path
         (``src/lib.rs:229-237``).
         """
+        return self._memo("violations_array", self._violations_array)
+
+    def _violations_array(self):
         from pyspark.sql import functions as F
 
         empty = F.array().cast(self.VIOLATION_TYPE)
@@ -844,6 +873,9 @@ class CompiledSpec:
         faster than ``size(violations_array_col())`` (measured, 3.4 M
         rows, 25 kernels); the array form exists for violation-ROW
         consumers that need (field, constraint, value)."""
+        return self._memo("violation_count", self._violation_count)
+
+    def _violation_count(self):
         from pyspark.sql import functions as F
 
         out = F.lit(0)

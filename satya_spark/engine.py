@@ -258,7 +258,12 @@ class ValidationEngine:
         schema; negligible storage); read back through
         :func:`satya_spark.io.read_split`, which handles the
         no-invalid-rows case where the quarantine partition was never
-        created."""
+        created.
+
+        ``validate --quarantine`` makes this write its only kernel
+        pass: shard verdicts come from the stored (capped) arrays and
+        violation rows from re-running the kernels over the
+        quarantine side alone."""
         ann = self.annotate(df).drop("shard")
         ann.write.mode(mode).partitionBy("valid").format(fmt).save(path)
         return {

@@ -617,6 +617,10 @@ def dup_clusters(
         ).select("e.src", "e.dst")
 
     n_edges = None  # unknown-large until the first contraction counts
+    # every round keeps one label row per node (round 0 groups by
+    # node; later rounds only left-join unique-keyed frames onto it),
+    # so the node count is taken once, by the first finish guard
+    n_nodes = None
     edges = _both(und)
     labels = None
     for rnd in range(max_iter):
@@ -713,7 +717,8 @@ def dup_clusters(
             # path never fires when the label table is corpus-sized —
             # at 100 TB the distributed loop simply continues.
             if n_edges <= finish_collect_max:
-                n_nodes = labels.count()
+                if n_nodes is None:
+                    n_nodes = labels.count()
                 if n_nodes + n_edges // 2 <= finish_collect_max:
                     return _cc_finish_driver(labels, und)
     raise RuntimeError(

@@ -432,7 +432,9 @@ def _offending(name: str, cat: str) -> Tuple[Any, str]:
     """Engine-portable string rendering of the offending value (same
     conventions as compiler.off_fns: DECIMAL(28,6) for floats,
     comma-join for string arrays). Spark side is a thunk — see
-    _rules on laziness."""
+    _rules on laziness. TRY_CAST on both engines: under ANSI mode a
+    plain cast of one |x| >= 1e22 value aborts the whole job; an
+    unrepresentable value renders NULL instead."""
     if cat.startswith("array"):
         return (
             lambda: _F().concat_ws(",", _F().col(name)),
@@ -440,8 +442,8 @@ def _offending(name: str, cat: str) -> Tuple[Any, str]:
         )
     if cat == "numeric":
         return (
-            lambda: _F().col(name).cast("decimal(28,6)").cast("string"),
-            f"CAST(CAST({name} AS DECIMAL(28,6)) AS VARCHAR)",
+            lambda: _F().col(name).try_cast("decimal(28,6)").cast("string"),
+            f"CAST(TRY_CAST({name} AS DECIMAL(28,6)) AS VARCHAR)",
         )
     return (
         lambda: _F().col(name).cast("string"),

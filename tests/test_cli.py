@@ -8,6 +8,8 @@ import os
 import subprocess
 import sys
 
+from pyspark.sql import functions as F
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -149,6 +151,162 @@ def test_cli_validate_quarantine_split(spark, tmp_path):
     quar = read_split(spark, f"{out}/split", "quarantine")
     assert clean.count() + quar.count() == summary["rows"]
     assert quar.count() > 0
+
+
+def _validate_in_process(monkeypatch, argv):
+    """Run ``validate`` in this process. Returns (exit code, summary,
+    kernel-array builds, the planned query of every DataFrame write).
+    Builds are counted behind the compiled-spec memo."""
+    import io
+    from contextlib import redirect_stdout
+
+    from pyspark.sql import SparkSession
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from satya_spark.__main__ import main
+    from satya_spark.compiler import CompiledSpec
+
+    builds, plans = [], []
+    build = CompiledSpec._violations_array
+
+    def counted(self):
+        builds.append(1)
+        return build(self)
+
+    def recorded(write):
+        def wrapper(self, *args, **kwargs):
+            out = write(self, *args, **kwargs)
+            plans.append(self._df._jdf.queryExecution().executedPlan().toString())
+            return out
+
+        return wrapper
+
+    monkeypatch.setattr(CompiledSpec, "_violations_array", counted)
+    monkeypatch.setattr(DataFrameWriter, "save", recorded(DataFrameWriter.save))
+    monkeypatch.setattr(DataFrameWriter, "parquet", recorded(DataFrameWriter.parquet))
+    # plan strings cut scan locations at 100 characters by default
+    conf = SparkSession.active().conf
+    limit = conf.get("spark.sql.maxMetadataStringLength")
+    conf.set("spark.sql.maxMetadataStringLength", "100000")
+    buf = io.StringIO()
+    try:
+        with redirect_stdout(buf):
+            rc = main(["validate", *argv])
+    finally:
+        conf.set("spark.sql.maxMetadataStringLength", limit)
+        monkeypatch.undo()
+    return rc, json.loads(buf.getvalue().strip().splitlines()[-1]), len(builds), plans
+
+
+def _scans_of(plans, path):
+    """How many of ``plans`` hold a FileScan over ``path``."""
+    return sum(
+        any("FileScan" in line and path in line for line in p.splitlines())
+        for p in plans
+    )
+
+
+def _assert_matches_three_pass(spark, eng, inp, out, summary):
+    """Verdict rows, violation rows (as a multiset) and split counts
+    of a ``validate --quarantine`` run equal the three-pass reference
+    (``shard_verdicts(annotate(df))``, ``violations(df)``)."""
+    from collections import Counter
+
+    from satya_spark.io import read_split
+
+    df = eng.conform(spark.read.parquet(inp))
+    ann = eng.annotate(df)
+    want_verdicts = sorted(tuple(r) for r in eng.shard_verdicts(ann).collect())
+    got_verdicts = sorted(tuple(r) for r in spark.read.parquet(f"{out}/verdicts").collect())
+    assert got_verdicts == want_verdicts
+    want_viol = Counter(tuple(r) for r in eng.violations(df).collect())
+    got_viol = Counter(tuple(r) for r in spark.read.parquet(f"{out}/violations").collect())
+    assert got_viol == want_viol
+    n_invalid = ann.filter(~F.col("valid")).count()
+    n_rows = df.count()
+    assert read_split(spark, f"{out}/split", "quarantine").count() == n_invalid
+    assert read_split(spark, f"{out}/split", "clean").count() == n_rows - n_invalid
+    assert (summary["rows"], summary["invalid_rows"]) == (n_rows, n_invalid)
+    return got_viol
+
+
+def test_cli_validate_quarantine_single_kernel_pass(spark, tmp_path, monkeypatch):
+    """validate --quarantine builds the kernel array once and runs it
+    over the input once (the split write); verdicts and violations
+    derived from the split equal the three-pass reference."""
+    from satya_spark.engine import ValidationEngine
+    from satya_spark.spec import transcript_spec
+    from satya_spark.transcripts import synthesize
+
+    inp = str(tmp_path / "in.parquet")
+    synthesize(spark, 200).write.parquet(inp)
+    out = str(tmp_path / "out")
+    rc, summary, builds, plans = _validate_in_process(
+        monkeypatch,
+        ["--input", inp, "--output", out, "--shards", "8", "--quarantine"],
+    )
+    assert rc == 3 and summary["invalid_rows"] > 0
+    assert builds == 1
+    assert len(plans) == 3  # split, verdicts, violations
+    assert _scans_of(plans, inp) == 1
+    eng = ValidationEngine(transcript_spec(), n_shards=8)
+    _assert_matches_three_pass(spark, eng, inp, out, summary)
+
+
+def test_cli_validate_quarantine_keeps_violations_uncapped(spark, tmp_path, monkeypatch):
+    """A spec with more rules than MAX_VIOLATIONS_PER_ROW and a row
+    breaking more than that many: the verdicts count the capped array
+    (as the reference does), the violation rows stay uncapped."""
+    from satya_spark.engine import MAX_VIOLATIONS_PER_ROW, ValidationEngine
+    from satya_spark.spec_json import from_json_schema
+
+    n_rules = MAX_VIOLATIONS_PER_ROW + 6
+    cols = [f"f{i}" for i in range(n_rules)]
+    schema = {
+        "title": "wide",
+        "type": "object",
+        "properties": {
+            "id": {"type": "integer"},
+            **{c: {"type": "integer", "minimum": 0} for c in cols},
+        },
+    }
+    sfile = tmp_path / "schema.json"
+    sfile.write_text(json.dumps(schema))
+    rows = [(1, *[-1] * n_rules), (2, *[0] * n_rules), (3, -1, -1, *[5] * (n_rules - 2))]
+    inp = str(tmp_path / "in.parquet")
+    spark.createDataFrame(
+        rows, ", ".join(f"{c} long" for c in ["id", *cols])
+    ).write.parquet(inp)
+    out = str(tmp_path / "out")
+    rc, summary, builds, plans = _validate_in_process(
+        monkeypatch,
+        ["--input", inp, "--output", out, "--shards", "4",
+         "--schema", str(sfile), "--quarantine"],
+    )
+    assert rc == 3 and builds == 1 and _scans_of(plans, inp) == 1
+    eng = ValidationEngine(from_json_schema(schema), n_shards=4)
+    viol = _assert_matches_three_pass(spark, eng, inp, out, summary)
+    per_id = {}
+    for (key, *_), n in viol.items():
+        per_id[key] = per_id.get(key, 0) + n
+    assert per_id == {1: n_rules, 3: 2}
+    verdicts = spark.read.parquet(f"{out}/verdicts").collect()
+    assert sum(r["n_rule_violations"] for r in verdicts) == MAX_VIOLATIONS_PER_ROW + 2
+
+
+def test_cli_validate_quarantine_empty_input(spark, tmp_path, monkeypatch):
+    """A 0-row input writes no split partition; the split is read back
+    with the annotated schema, so the job still succeeds."""
+    from satya_spark.transcripts import synthesize
+
+    inp = str(tmp_path / "in.parquet")
+    synthesize(spark, 10).limit(0).write.parquet(inp)
+    out = str(tmp_path / "out")
+    rc, summary, builds, _ = _validate_in_process(
+        monkeypatch, ["--input", inp, "--output", out, "--quarantine"]
+    )
+    assert rc == 0 and builds == 1
+    assert (summary["rows"], summary["invalid_rows"], summary["shards"]) == (0, 0, 0)
 
 
 def test_cli_clean_corpus(spark, tmp_path):

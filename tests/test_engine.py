@@ -145,3 +145,50 @@ def test_write_split_one_pass_quarantine(spark, tmp_path):
     clean2_path = str(tmp_path / "split_clean")
     eng.write_split(clean.drop("valid", "violations"), clean2_path)
     assert read_split(spark, clean2_path, "quarantine").count() == 0
+
+
+def test_kernel_columns_built_once_per_spark_context(spark, monkeypatch):
+    """The composite kernel columns are memoized: repeated calls (and
+    every engine consumer) share one build. Another active
+    SparkContext (a stub standing in for a restarted session; the
+    suite's session keeps running) triggers a rebuild."""
+    from pyspark import SparkContext
+
+    from satya_spark.compiler import CompiledSpec
+
+    eng = ValidationEngine(transcript_spec(), n_shards=8)
+    cs = eng.compiled
+    builds = {"violations_array": 0, "violation_count": 0, "valid": 0}
+    for name in builds:
+        real = getattr(CompiledSpec, f"_{name}")
+
+        def counted(self, real=real, name=name):
+            builds[name] += 1
+            return real(self)
+
+        monkeypatch.setattr(CompiledSpec, f"_{name}", counted)
+
+    arr, cnt, ok = cs.violations_array_col(), cs.violation_count_col(), cs.valid_col()
+    assert cs.violations_array_col() is arr
+    assert cs.violation_count_col() is cnt
+    assert cs.valid_col() is ok
+    df = synthesize(spark, n_conv=20)
+    eng.shard_verdicts(eng.annotate(df))
+    eng.shard_verdicts(df)
+    eng.violations(df)
+    eng.run(df)
+    assert builds == {"violations_array": 1, "violation_count": 1, "valid": 1}
+
+    sc = SparkContext._active_spark_context
+
+    class _OtherContext:
+        def __getattr__(self, attr):
+            return getattr(sc, attr)
+
+    monkeypatch.setattr(SparkContext, "_active_spark_context", _OtherContext())
+    rebuilt = cs.violations_array_col()
+    assert rebuilt is not arr and builds["violations_array"] == 2
+    assert cs.violations_array_col() is rebuilt
+    monkeypatch.setattr(SparkContext, "_active_spark_context", sc)
+    assert cs.violations_array_col() is not rebuilt
+    assert builds["violations_array"] == 3

@@ -1030,10 +1030,13 @@ def test_dup_clusters_r6_knobs(spark):
         "id_a long, id_b long",
     )
     want = {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
+    # finish_collect_max=0 keeps the contraction variants on the
+    # distributed loop: a graph this small otherwise goes straight to
+    # the driver-side union-find after round 0
     for kw in (
         {"assume_distinct": True},
-        {"contract_min_edges": 0},
-        {"contract_min_edges": 10**9},
+        {"contract_min_edges": 0, "finish_collect_max": 0},
+        {"contract_min_edges": 10**9, "finish_collect_max": 0},
     ):
         out = {
             r["doc_id"]: r["cluster_id"]
@@ -1051,7 +1054,9 @@ def test_dup_clusters_long_chain_pointer_jump(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(100, 132)], "id_a long, id_b long"
     )
-    out = dup_clusters(pairs, max_iter=10)
+    # finish_collect_max=0: the pointer-jumping rounds, not the
+    # driver-side finish, must do the work
+    out = dup_clusters(pairs, max_iter=10, finish_collect_max=0)
     assert {r["cluster_id"] for r in out.collect()} == {100}
     assert out.count() == 33
 

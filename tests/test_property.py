@@ -11,6 +11,7 @@ import re
 from decimal import Decimal as _Dec
 
 import hypothesis.strategies as st
+import pytest
 from hypothesis import HealthCheck, given, settings
 from pyspark.sql import types as T
 
@@ -1121,16 +1122,20 @@ def _py_components(edges):
     return {n: find(n) for n in parent}
 
 
+# finish_collect_max=0 keeps every round on the distributed loop; the
+# default hands these small graphs to the driver-side union-find
+@pytest.mark.parametrize("finish", [{}, {"finish_collect_max": 0}], ids=["default", "0"])
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 @given(edges=_edge_lists)
-def test_dup_clusters_matches_union_find(spark, edges):
+def test_dup_clusters_matches_union_find(spark, finish, edges):
     from satya_spark.functions.dedup import dup_clusters
 
     df = spark.createDataFrame(
         [(int(a), int(b)) for a, b in edges], "id_a long, id_b long"
     )
     got = {
-        r["doc_id"]: r["cluster_id"] for r in dup_clusters(df).collect()
+        r["doc_id"]: r["cluster_id"]
+        for r in dup_clusters(df, **finish).collect()
     }
     assert got == _py_components(edges)
 

@@ -152,3 +152,28 @@ def test_columnar_matches_facade(spark):
                        if k in str(e))]
                 expected.add((uid, limit, pname, cname))
     assert got == expected and len(got) >= 7
+
+
+def test_out_of_range_offending_value_is_null_on_both_engines(spark):
+    """Under ANSI mode a plain CAST(1e30 AS DECIMAL(28,6)) aborts the
+    job. Offending values use TRY_CAST, so the 1e30 violation renders
+    NULL in Spark and in the DuckDB twin, and the in-range violation
+    next to it keeps its decimal text."""
+    import duckdb
+
+    params = {"score": web.QueryParam(None, le=100.0)}
+    data = [(0, 1e30), (1, 200.0), (2, 5.0)]
+    df = spark.createDataFrame(data, "i int, score double")
+    spark_rows = sorted(
+        (r["i"], r["constraint_name"], r["offending_value"])
+        for r in web.violations_df(df, params, ["i"]).collect()
+    )
+    assert spark_rows == [(0, "le", None), (1, "le", "200.000000")]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (i INT, score DOUBLE)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", data)
+    sql = web.violations_sql("t", params, ["i"], dtypes=dict(df.dtypes))
+    duck_rows = sorted(
+        (i, c, v) for i, _loc, _p, c, v in con.execute(sql).fetchall()
+    )
+    assert duck_rows == spark_rows
